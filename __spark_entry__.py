@@ -1938,7 +1938,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # oracle SQL (DuckDB side)
 # --------------------------------------------------------------------------
 
-def _sql_pagerank(iters: int, weighted: bool) -> str:
+def _sql_pagerank_cte(iters: int, weighted: bool) -> str:
+    """The delta-push replay up to its ``pr(iter, id, rank, delta)`` CTE;
+    callers add the projection over ``pr WHERE iter = iters``."""
     if weighted:
         pre = f"WITH RECURSIVE {SQL_WEDGES}, {SQL_WNODES},\n"
         edges, nodes = "wedges", "wnodes"
@@ -1965,7 +1967,11 @@ pr(iter, id, rank, delta) AS (
     FROM pr p2 JOIN deg d ON d.src = p2.id JOIN {edges} e ON e.src = p2.id
     GROUP BY e.dst
   ) m ON m.id = p.id
-)
+)"""
+
+
+def _sql_pagerank(iters: int, weighted: bool) -> str:
+    return _sql_pagerank_cte(iters, weighted) + f"""
 SELECT id, ROUND(rank, 6) AS score FROM pr WHERE iter = {iters}"""
 
 
@@ -3276,12 +3282,10 @@ deg AS (SELECT n.id, COUNT(e.src) AS degree
         FROM nodes n LEFT JOIN edges e ON e.src = n.id GROUP BY n.id)
 SELECT degree, COUNT(*) AS node_count FROM deg GROUP BY degree"""
 
-    sqls["pagerank_stats"] = _sql_pagerank(PR_ITERS, weighted=False).replace(
-        f"SELECT id, ROUND(rank, 6) AS score FROM pr WHERE iter = {PR_ITERS}",
-        f"""SELECT COUNT(*) AS node_count, ROUND(MIN(rank), 6) AS min_score,
+    sqls["pagerank_stats"] = _sql_pagerank_cte(PR_ITERS, weighted=False) + f"""
+SELECT COUNT(*) AS node_count, ROUND(MIN(rank), 6) AS min_score,
        ROUND(MAX(rank), 6) AS max_score, ROUND(AVG(rank), 3) AS mean_score
-FROM pr WHERE iter = {PR_ITERS}""",
-    )
+FROM pr WHERE iter = {PR_ITERS}"""
 
     # dendrogram invariants are structural (no single-shot SQL for the
     # hierarchical fixpoint — same treatment as the `louvain` contract row)

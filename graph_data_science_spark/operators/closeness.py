@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -124,12 +124,11 @@ def msbfs_aggregates(
                 (F.col("cnt") + nbits).alias("cnt"),
                 (F.col("inv") + nbits / F.lit(float(depth))).alias("inv"),
             )
-            obs = Observation()
-            nxt = nxt.observe(obs, F.sum(F.bit_count("frontier")).alias("active"))
-            state = ckpt.checkpoint(nxt, depth, name="msbfs")
-            active = int(obs.get["active"] or 0)
-            ckpt.log(depth, algorithm="msbfs", active_bits=active)
-            if active == 0:
+            state, row = ckpt.commit(
+                nxt, depth, name="msbfs", log=False, active=F.sum(F.bit_count("frontier"))
+            )
+            ckpt.log(depth, algorithm="msbfs", active_bits=row["active"])
+            if row["active"] == 0:
                 break
 
     edges.unpersist()

@@ -18,7 +18,6 @@ determinism).  Each round = one join + one groupBy; state parquet-checkpointed.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -27,7 +26,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -60,7 +59,6 @@ def _min_free_color(colors_set):
 def k1coloring(graph: LinkGraph, cfg: Optional[K1ColoringConfig] = None) -> K1ColoringResult:
     cfg = cfg or K1ColoringConfig()
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # coloring is over the undirected conflict graph
@@ -71,15 +69,16 @@ def k1coloring(graph: LinkGraph, cfg: Optional[K1ColoringConfig] = None) -> K1Co
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    sym = cache_copartitioned(sym, n_part, "src")
-
-    state = graph.nodes.select("id", F.lit(0).cast("long").alias("color"))
-    state = ckpt.checkpoint(state, 0)
 
     ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(1, cfg.max_iterations + 1):
+    with SuperstepCheckpointer.for_algorithm(
+        "k1coloring", graph, cfg.max_iterations, cfg.checkpoint_path
+    ) as loop:
+        sym = loop.hold(cache_copartitioned(sym, n_part, "src"))
+        state = loop.initial(
+            lambda: graph.nodes.select("id", F.lit(0).cast("long").alias("color"))
+        )
+        for t in loop.supersteps():
             c_src = state.select(F.col("id").alias("src"), F.col("color").alias("c_src"))
             c_dst = state.select(F.col("id").alias("dst"), F.col("color").alias("c_dst"))
             colored_edges = sym.join(c_src, "src").join(c_dst, "dst")
@@ -92,7 +91,7 @@ def k1coloring(graph: LinkGraph, cfg: Optional[K1ColoringConfig] = None) -> K1Co
                 .distinct()
             )
             n_conf = conflicted.count()
-            ckpt.log(t, algorithm="k1coloring", conflicts=n_conf, wall_s=time.time() - t0)
+            loop.record(t, conflicts=n_conf)
             if n_conf == 0:
                 ran, converged = t, True
                 break
@@ -108,10 +107,9 @@ def k1coloring(graph: LinkGraph, cfg: Optional[K1ColoringConfig] = None) -> K1Co
                 state.join(nbr_colors, "id", "left")
                 .select("id", F.coalesce("new_color", "color").alias("color"))
             )
-            state = ckpt.checkpoint(state, t)
+            state = loop.checkpoint(state, t)
 
-    sym.unpersist()
-    return K1ColoringResult(state.select("id", "color"), ran, converged, ckpt.metrics)
+    return K1ColoringResult(state.select("id", "color"), ran, converged, loop.metrics)
 
 
 def validate_coloring(graph: LinkGraph, colors: DataFrame) -> int:

@@ -16,16 +16,15 @@ action but re-executes the phase joins inside the norm subplans, which
 costs more than the barrier it saves.)
 """
 
-import time
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -46,23 +45,19 @@ class HitsResult:
 def hits(graph: LinkGraph, cfg: Optional[HitsConfig] = None) -> HitsResult:
     cfg = cfg or HitsConfig()
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report("hits", graph.nodes, graph.edges, cfg.hits_iterations, state_cols=3))
-
-    edges = cache_copartitioned(
-        graph.edges.select("src", "dst").distinct(), n_part, "src"
-    )
-    state = graph.nodes.select("id", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub"))
-    state = ckpt.checkpoint(state, 0)
-
     ran, converged = cfg.hits_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(1, cfg.hits_iterations + 1):
+    with SuperstepCheckpointer.for_algorithm(
+        "hits", graph, cfg.hits_iterations, cfg.checkpoint_path, state_cols=3
+    ) as loop:
+        edges = loop.hold(cache_copartitioned(
+            graph.edges.select("src", "dst").distinct(), n_part, "src"
+        ))
+        state = loop.initial(lambda: graph.nodes.select(
+            "id", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")
+        ))
+        for t in loop.supersteps():
             # auth phase: auth(v) = Σ hub(u) for u->v; the L2 norm rides the
             # phase checkpoint via observe (no extra job, no recompute)
             hubs = state.select(F.col("id").alias("src"), "hub")
@@ -75,10 +70,10 @@ def hits(graph: LinkGraph, cfg: Optional[HitsConfig] = None) -> HitsResult:
                 F.col("auth").alias("auth_prev"),
                 "hub",
             )
-            obs_a = Observation()
-            s1 = s1.observe(obs_a, F.sum(F.col("auth_new") ** 2).alias("ss"))
-            s1 = ckpt.checkpoint(s1, t, name="auth_phase")
-            na = float(obs_a.get["ss"] or 0.0) ** 0.5 or 1.0
+            s1, c = loop.commit(
+                s1, t, name="auth_phase", log=False, ss=F.sum(F.col("auth_new") ** 2)
+            )
+            na = float(c["ss"]) ** 0.5 or 1.0
 
             # hub phase: hub(u) = Σ auth(v) for u->v; normalized auth derived
             # lazily from the materialized raw column + the observed scalar
@@ -93,23 +88,17 @@ def hits(graph: LinkGraph, cfg: Optional[HitsConfig] = None) -> HitsResult:
                 F.col("auth_prev"),
                 F.coalesce("hub_raw", F.lit(0.0)).alias("hub_new"),
             )
-            obs_h = Observation()
-            s2 = s2.observe(
-                obs_h,
-                F.sum(F.col("hub_new") ** 2).alias("ss"),
-                F.sqrt(F.sum((F.col("auth") - F.col("auth_prev")) ** 2)).alias("delta"),
+            s2, c = loop.commit(
+                s2, t, name="hub_phase",
+                ss=F.sum(F.col("hub_new") ** 2),
+                l2_delta=F.sqrt(F.sum((F.col("auth") - F.col("auth_prev")) ** 2)),
             )
-            s2 = ckpt.checkpoint(s2, t, name="hub_phase")
-            row = obs_h.get
-            nh = float(row["ss"] or 0.0) ** 0.5 or 1.0
-            delta = float(row["delta"] or 0.0)
+            nh = float(c["ss"]) ** 0.5 or 1.0
             state = s2.select(
                 "id", "auth", (F.col("hub_new") / F.lit(nh)).alias("hub")
             )
-            ckpt.log(t, algorithm="hits", l2_delta=delta, wall_s=time.time() - t0)
-            if delta <= cfg.tolerance:
+            if float(c["l2_delta"]) <= cfg.tolerance:
                 ran, converged = t, True
                 break
 
-    edges.unpersist()
-    return HitsResult(state.select("id", "auth", "hub"), ran, converged, ckpt.metrics)
+    return HitsResult(state.select("id", "auth", "hub"), ran, converged, loop.metrics)

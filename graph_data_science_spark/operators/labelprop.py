@@ -23,7 +23,6 @@ compare+swap.  Converged when no label changed (LabelPropagation.java:131-135).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -32,7 +31,7 @@ from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -73,25 +72,7 @@ def label_propagation(
 ) -> LabelPropagationResult:
     cfg = cfg or LabelPropagationConfig()
     spark = graph.nodes.sparkSession
-    fp = None
-    if cfg.checkpoint_path is not None:
-        from graph_data_science_spark.plans.checkpoint import graph_fingerprint
-
-        fp = graph_fingerprint(
-            graph.nodes,
-            graph.edges,
-            algorithm="labelprop",
-            weighted=cfg.weighted,
-            seed_property=cfg.seed_property,
-            node_weight_property=cfg.node_weight_property,
-            orientation=str(cfg.orientation),
-        )
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path, fingerprint=fp)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report("labelprop", graph.nodes, graph.edges, cfg.max_iterations))
 
     # gather direction matches the reference's forEachRelationship: a node
     # adopts labels from its out-neighbors under the given orientation
@@ -107,30 +88,25 @@ def label_propagation(
     else:
         edges = edges.withColumn("node_w", F.lit(1.0))
     vote_w = (F.col("weight") if cfg.weighted else F.lit(1.0)) * F.col("node_w")
-    edges = cache_copartitioned(
-        edges.select("src", "dst", vote_w.alias("vote")), n_part, "dst"
-    )
 
-    # resume (north rule: every superstep resumable mid-iteration): the sync
-    # update is a deterministic function of the previous label state, so
-    # continuing from the latest COMMITTED superstep replays exactly the
-    # trajectory an uninterrupted run would have taken.  The fingerprint gate
-    # (graph content + config identity) refuses stale state from a different
-    # graph or config at the same path.
-    start_t = 0
-    resumed = ckpt.latest_superstep()
-    if resumed is not None and 0 < resumed < cfg.max_iterations:
-        state = ckpt.load(resumed)
-        start_t = resumed
-        ckpt.log(resumed, algorithm="labelprop", resumed_from=resumed)
-    else:
-        state = _init_labels(graph, cfg)
-        state = ckpt.checkpoint(state, 0)
-
+    # resume: the sync update is a deterministic function of the previous
+    # label state, so continuing from the latest committed superstep replays
+    # exactly the trajectory an uninterrupted run would have taken.
     ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(start_t + 1, cfg.max_iterations + 1):
+    with SuperstepCheckpointer.for_algorithm(
+        "labelprop", graph, cfg.max_iterations, cfg.checkpoint_path,
+        resume=dict(
+            weighted=cfg.weighted,
+            seed_property=cfg.seed_property,
+            node_weight_property=cfg.node_weight_property,
+            orientation=str(cfg.orientation),
+        ),
+    ) as loop:
+        edges = loop.hold(cache_copartitioned(
+            edges.select("src", "dst", vote_w.alias("vote")), n_part, "dst"
+        ))
+        state = loop.initial(lambda: _init_labels(graph, cfg))
+        for t in loop.supersteps():
             nbr_labels = state.select(F.col("id").alias("dst"), F.col("label").alias("nbr_label"))
             votes = (
                 edges.join(nbr_labels, "dst")
@@ -148,21 +124,14 @@ def label_propagation(
                 F.coalesce("new_label", "label").alias("label"),
                 (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
             )
-            # changed-count rides the checkpoint write (observe) — no extra job
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            observed = merged.observe(
-                obs, F.sum(F.col("changed").cast("long")).alias("c")
-            ).select("id", "label")
-            state = ckpt.checkpoint(observed, t)
-            changed = int(obs.get["c"] or 0)
-            ckpt.log(t, algorithm="labelprop", changed=changed, wall_s=time.time() - t0)
-            if changed == 0:
+            state, c = loop.commit(
+                merged, t, drop=("changed",), changed=F.sum(F.col("changed").cast("long"))
+            )
+            if c["changed"] == 0:
                 ran, converged = t, True
                 break
 
-    return LabelPropagationResult(state.select("id", "label"), ran, converged, ckpt.metrics)
+    return LabelPropagationResult(state.select("id", "label"), ran, converged, loop.metrics)
 
 
 def label_propagation_async_oracle(

@@ -193,22 +193,13 @@ def _local_moving(
             F.col("new_comm").isNotNull().alias("_cand"),
             (F.col("new_comm").isNotNull() & apply_gate).alias("_moved"),
         )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        observed = merged.observe(
-            obs,
-            F.sum(F.col("_cand").cast("long")).alias("cand_moves"),
-            F.sum(F.col("_moved").cast("long")).alias("moved"),
-        ).select("id", "community", "deg")
-        comm = ckpt.checkpoint(observed, it, name=f"louvain_l{level}")
-        row = obs.get
-        cand_moves, moved = int(row["cand_moves"] or 0), int(row["moved"] or 0)
-        ckpt.log(
-            it, algorithm="louvain_move", level=level, moved=moved,
-            cand_moves=cand_moves,
+        comm, row = ckpt.commit(
+            merged, it, name=f"louvain_l{level}", drop=("_cand", "_moved"), log=False,
+            cand_moves=F.sum(F.col("_cand").cast("long")),
+            moved=F.sum(F.col("_moved").cast("long")),
         )
-        if cand_moves == 0:
+        ckpt.log(it, algorithm="louvain_move", level=level, **row)
+        if row["cand_moves"] == 0:
             break
 
     nodes_deg.unpersist()

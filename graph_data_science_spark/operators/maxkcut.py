@@ -22,7 +22,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -130,12 +130,11 @@ def approx_max_k_cut(
                     F.col("new_p").isNotNull() & (F.col("new_p") != F.col("partition"))
                 ).alias("_cand"),
             )
-            obs = Observation()
-            observed = merged.observe(
-                obs, F.sum(F.col("_cand").cast("long")).alias("cand")
-            ).select("id", "partition")
-            assign = ckpt.checkpoint(observed, it, name="kcut")
-            cand = int(obs.get["cand"] or 0)
+            assign, row = ckpt.commit(
+                merged, it, name="kcut", drop=("_cand",), log=False,
+                cand=F.sum(F.col("_cand").cast("long")),
+            )
+            cand = row["cand"]
             cut = _cut_weight(graph, assign)
             if cut > best_cut:
                 best_assign = ckpt.checkpoint(assign, it, name="kcut_best")

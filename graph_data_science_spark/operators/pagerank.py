@@ -30,7 +30,6 @@ the map-task count.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -38,7 +37,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -141,38 +140,8 @@ def article_rank(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Central
 
 
 def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> CentralityResult:
-    spark = graph.nodes.sparkSession
-    fp = None
-    if cfg.checkpoint_path is not None:
-        from graph_data_science_spark.plans.checkpoint import graph_fingerprint
-
-        fp = graph_fingerprint(
-            graph.nodes,
-            graph.edges,
-            algorithm=denominator,
-            damping=cfg.damping_factor,
-            tolerance=cfg.tolerance,
-            source_nodes=cfg.source_nodes,
-            weighted=cfg.weighted,
-            orientation=str(cfg.orientation),
-            # seeded and unseeded runs must not resume each other's
-            # checkpoints; distinct seeds should use distinct paths
-            seeded=cfg.seed_ranks is not None,
-            # extrapolated runs follow a different superstep trajectory
-            extrapolate_every=cfg.extrapolate_every,
-        )
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path, fingerprint=fp)
     alpha = 1.0 - cfg.damping_factor
     d = cfg.damping_factor
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report(
-        "pagerank" if denominator == "degree" else "articlerank",
-        graph.nodes, graph.edges, cfg.max_iterations,
-    ))
-    shares = _out_shares(graph, cfg, denominator)
-
     if cfg.source_nodes:
         srcs = set(int(s) for s in cfg.source_nodes)
         init = (
@@ -181,16 +150,9 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
     else:
         init = F.lit(alpha)
 
-    # resume: with a durable checkpoint path, continue from the latest
-    # COMMITTED superstep (north rule: resumable mid-iteration; a partial
-    # write without the _COMMITTED manifest is never trusted).
-    start_t = 0
-    resumed = ckpt.latest_superstep()
-    if resumed is not None and 0 < resumed < cfg.max_iterations:
-        state = ckpt.load(resumed)
-        start_t = resumed
-        ckpt.log(resumed, algorithm="pagerank", resumed_from=resumed)
-    elif cfg.seed_ranks is not None:
+    def initial_state() -> DataFrame:
+        if cfg.seed_ranks is None:
+            return graph.nodes.select("id", init.alias("rank"), init.alias("delta"))
         # warm start: one Jacobi step from the seed, then iterate on the
         # residual.  rank_0 = init + d*M^T r0 (the seed pushed through one
         # superstep) and delta_0 = rank_0 - r0; the delta-push loop then adds
@@ -207,57 +169,71 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
             .agg((F.lit(d) * F.sum(F.col("r0") * F.col("share"))).alias("m"))
             .select(F.col("dst").alias("id"), "m")
         )
-        state = r0.join(msg, "id", "left").select(
+        return r0.join(msg, "id", "left").select(
             "id",
             (init + F.coalesce("m", F.lit(0.0))).alias("rank"),
             (init + F.coalesce("m", F.lit(0.0)) - F.col("r0")).alias("delta"),
         )
-        state = ckpt.checkpoint(state, 0)
-    else:
-        state = graph.nodes.select("id", init.alias("rank"), init.alias("delta"))
-        state = ckpt.checkpoint(state, 0)
 
-    # ranIterations mirrors Pregel.run (pregel/.../Pregel.java:154-190): on
-    # convergence the 0-based index of the converged iteration is reported;
-    # otherwise maxIterations.
-    ran, converged = cfg.max_iterations, False
-    if cfg.max_iterations <= 0:
-        return CentralityResult(state.select("id", F.col("rank").alias("score")), 0, False)
+    # resume: with a durable checkpoint path, continue from the latest
+    # COMMITTED superstep (a partial write without the _COMMITTED manifest is
+    # never trusted).  Seeded and unseeded runs must not resume each other's
+    # checkpoints (distinct seeds should use distinct paths), and
+    # extrapolated runs follow a different superstep trajectory.
+    with SuperstepCheckpointer.for_algorithm(
+        "pagerank" if denominator == "degree" else "articlerank",
+        graph, cfg.max_iterations, cfg.checkpoint_path,
+        resume=dict(
+            damping=cfg.damping_factor,
+            tolerance=cfg.tolerance,
+            source_nodes=cfg.source_nodes,
+            weighted=cfg.weighted,
+            orientation=str(cfg.orientation),
+            seeded=cfg.seed_ranks is not None,
+            extrapolate_every=cfg.extrapolate_every,
+        ),
+    ) as loop:
+        shares = loop.hold(_out_shares(graph, cfg, denominator))
+        state = loop.initial(initial_state)
+        # ranIterations mirrors Pregel.run (pregel/.../Pregel.java:154-190): on
+        # convergence the 0-based index of the converged iteration is reported;
+        # otherwise maxIterations.
+        ran, converged = cfg.max_iterations, False
+        if cfg.max_iterations <= 0:
+            return CentralityResult(state.select("id", F.col("rank").alias("score")), 0, False)
 
-    t0 = time.time()
-    # Superstep window (checkpoint_every = K): K supersteps run as ONE job.
-    # The message stream is a *delta-only* chain — each step references only
-    # the previous step's (id, delta) rows, once — so the window's plan grows
-    # linearly, and nodes that stop sending drop out of the stream entirely
-    # (active-set pruning in data volume, not just a filter).  At the window
-    # boundary rank is rebuilt by UNION of the carried rank rows with every
-    # window delta + one hash aggregation (stats ADD under union, so no
-    # sizeInBytes blowup), and rank+final-delta are materialized in a single
-    # checkpoint write whose observe() metric doubles as the convergence
-    # count — one action, one barrier, one serial driver round per K
-    # supersteps.  With K=1 this reproduces GDS's per-iteration convergence
-    # reporting exactly.
-    #
-    # Each in-window delta is persisted (MEMORY_AND_DISK, node-sized rows):
-    # delta_i has TWO consumers — the next superstep's senders and the
-    # boundary rank rebuild — and without the persist the rebuild re-executes
-    # every reduce-side aggregation of the chain (measured: K=8 DOUBLED q1
-    # wall at sf0.1 vs K=4, BENCH.md "checkpoint-window sensitivity").  The
-    # cache is populated inside the one window job and dropped right after
-    # the boundary write commits, so peak extra memory is K node-sized
-    # frames; on block loss the lineage is intact and recompute is bounded by
-    # the previous parquet checkpoint.  With it, widening K trades nothing
-    # away — the serial barrier floor amortizes over K supersteps while the
-    # boundary rebuild stays one union + one agg over already-materialized
-    # rows.
-    every = max(1, int(cfg.checkpoint_every))
-    from pyspark import StorageLevel
+        # Superstep window (checkpoint_every = K): K supersteps run as ONE job.
+        # The message stream is a *delta-only* chain — each step references only
+        # the previous step's (id, delta) rows, once — so the window's plan grows
+        # linearly, and nodes that stop sending drop out of the stream entirely
+        # (active-set pruning in data volume, not just a filter).  At the window
+        # boundary rank is rebuilt by UNION of the carried rank rows with every
+        # window delta + one hash aggregation (stats ADD under union, so no
+        # sizeInBytes blowup), and rank+final-delta are materialized in a single
+        # checkpoint write whose observe() metric doubles as the convergence
+        # count — one action, one barrier, one serial driver round per K
+        # supersteps.  With K=1 this reproduces GDS's per-iteration convergence
+        # reporting exactly.
+        #
+        # Each in-window delta is persisted (MEMORY_AND_DISK, node-sized rows):
+        # delta_i has TWO consumers — the next superstep's senders and the
+        # boundary rank rebuild — and without the persist the rebuild re-executes
+        # every reduce-side aggregation of the chain (measured: K=8 DOUBLED q1
+        # wall at sf0.1 vs K=4, BENCH.md "checkpoint-window sensitivity").  The
+        # cache is populated inside the one window job and dropped right after
+        # the boundary write commits, so peak extra memory is K node-sized
+        # frames; on block loss the lineage is intact and recompute is bounded by
+        # the previous parquet checkpoint.  With it, widening K trades nothing
+        # away — the serial barrier floor amortizes over K supersteps while the
+        # boundary rebuild stays one union + one agg over already-materialized
+        # rows.
+        every = max(1, int(cfg.checkpoint_every))
+        from pyspark import StorageLevel
 
-    with no_aqe(spark):
         delta = None  # in-window chained (id, delta) stream; None = at boundary
         window: list = []
-        last_x = start_t  # superstep of the latest extrapolation (or start)
-        for t in range(start_t + 1, cfg.max_iterations):
+        last_x = loop.start_step  # superstep of the latest extrapolation (or start)
+        for t in loop.supersteps(cfg.max_iterations - 1):
             # superstep t receives what superstep t-1 sent; on the initial
             # superstep every node sends regardless of tolerance
             # (PageRankComputation.java:90 `delta > tolerance || isInitialSuperstep`).
@@ -276,7 +252,7 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
                 .agg((F.lit(d) * F.sum(F.col("delta") * F.col("share"))).alias("delta"))
                 .select(F.col("dst").alias("id"), "delta")
             )
-            delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
+            delta = loop.hold(delta.persist(StorageLevel.MEMORY_AND_DISK))
             window.append(delta)
             if t % every != 0 and t != cfg.max_iterations - 1:
                 continue
@@ -378,7 +354,7 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
                 # materialize r* once (it feeds both sides of the restart
                 # join), then restart the recurrence with one Jacobi step —
                 # identical to the seed_ranks warm-start path.
-                rstar = ckpt.checkpoint(
+                rstar = loop.checkpoint(
                     agg.select("id", (F.col("rank") + corr).alias("r0")),
                     t, name="xtrap",
                 )
@@ -394,31 +370,19 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
                     (init + F.coalesce("m", F.lit(0.0))).alias("rank"),
                     (init + F.coalesce("m", F.lit(0.0)) - F.col("r0")).alias("delta"),
                 )
-            obs = None
+            counters = {}
             if cfg.tolerance > 0.0:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                new_state = new_state.observe(
-                    obs,
-                    F.sum(
-                        (F.abs(F.col("delta")) > cfg.tolerance).cast("long")
-                    ).alias("active"),
+                counters["active"] = F.sum(
+                    (F.abs(F.col("delta")) > cfg.tolerance).cast("long")
                 )
-            state = ckpt.checkpoint(new_state, t)
-            for w_df in window:
-                w_df.unpersist()
-            delta, window = None, []
-            active = int(obs.get["active"] or 0) if obs is not None else -1
-            ckpt.log(
-                t,
-                algorithm="pagerank" if denominator == "degree" else "articlerank",
-                active=active,
-                wall_s=time.time() - t0,
-                # an extrapolated boundary spends one extra M^T·r product on
-                # the restart — counted here for honest edges/sec accounting
-                extrapolated=bool(do_x),
+            # an extrapolated boundary spends one extra M^T·r product on the
+            # restart — counted for honest edges/sec accounting
+            state, c = loop.commit(
+                new_state, t, extra=dict(active=-1, extrapolated=bool(do_x)), **counters
             )
+            loop.release(*window)
+            delta, window = None, []
+            active = c.get("active", -1)
             if active == 0:
                 ran, converged = t, True
                 break
@@ -428,7 +392,7 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
         from graph_data_science_spark.operators.scaling import scale_property
 
         scores = scale_property(scores, "score", cfg.scaler)
-    return CentralityResult(scores, ran, converged, ckpt.metrics)
+    return CentralityResult(scores, ran, converged, loop.metrics)
 
 
 def pagerank_residual(
@@ -478,24 +442,6 @@ def pagerank_residual(
 def eigenvector(graph: LinkGraph, cfg: PageRankConfig | None = None) -> CentralityResult:
     """Eigenvector centrality (EigenvectorComputation.java; FIXTURES.md §B4)."""
     cfg = cfg or PageRankConfig()
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report(
-        "eigenvector", graph.nodes, graph.edges, cfg.max_iterations
-    ))
-    shares = _out_shares(graph, cfg, denominator="one_or_wdeg")
-
-    n = graph.node_count()
-    if cfg.source_nodes:
-        srcs = [int(s) for s in cfg.source_nodes]
-        init_val = 1.0 / len(srcs)
-        init = F.when(F.col("id").isin(srcs), F.lit(init_val)).otherwise(F.lit(0.0))
-    else:
-        init = F.lit(1.0 / n)
-
     # ONE action per superstep and NOTHING recomputed: the pre-normalization
     # state is checkpointed with the L2 sum-of-squares riding the write as an
     # observe metric; the normalized rank column then derives LAZILY from the
@@ -505,17 +451,8 @@ def eigenvector(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Centrali
     # the frame, so convergence detection lags one superstep and the scores
     # of the CONVERGED superstep are returned (GDS reports the iteration the
     # check passed on).
-    from pyspark.sql import Observation
-
-    pre = graph.nodes.select(
-        "id", init.alias("next"), F.lit(None).cast("double").alias("prev_rank")
-    )
-    obs0 = Observation()
-    pre = pre.observe(obs0, F.sum(F.col("next") ** 2).alias("ss"))
-    pre = ckpt.checkpoint(pre, 0)
-    norm = float(obs0.get["ss"] or 0.0) ** 0.5 or 1.0
-
-    def _normalized(df, nrm):
+    def _normalized(df, ss):
+        nrm = float(ss) ** 0.5 or 1.0
         return df.select(
             "id",
             (F.col("next") / F.lit(nrm)).alias("rank"),
@@ -523,12 +460,23 @@ def eigenvector(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Centrali
             "prev_rank",
         )
 
-    state = _normalized(pre, norm)
-    prev_scores = state
     ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(1, cfg.max_iterations):
+    with SuperstepCheckpointer.for_algorithm(
+        "eigenvector", graph, cfg.max_iterations, cfg.checkpoint_path
+    ) as loop:
+        shares = loop.hold(_out_shares(graph, cfg, denominator="one_or_wdeg"))
+        if cfg.source_nodes:
+            srcs = [int(s) for s in cfg.source_nodes]
+            init = F.when(F.col("id").isin(srcs), F.lit(1.0 / len(srcs))).otherwise(F.lit(0.0))
+        else:
+            init = F.lit(1.0 / graph.node_count())
+        pre = graph.nodes.select(
+            "id", init.alias("next"), F.lit(None).cast("double").alias("prev_rank")
+        )
+        pre, c = loop.commit(pre, 0, log=False, ss=F.sum(F.col("next") ** 2))
+        state = _normalized(pre, c["ss"])
+        prev_scores = state
+        for t in loop.supersteps(cfg.max_iterations - 1):
             msgs = (
                 state.select("id", "sent_base")
                 .join(shares, state["id"] == shares["src"])
@@ -544,30 +492,19 @@ def eigenvector(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Centrali
                     (F.col("rank") + F.coalesce(F.col("msg"), F.lit(0.0))).alias("next"),
                 )
             )
-            obs = Observation()
-            nxt = nxt.observe(
-                obs,
-                F.sum(F.col("next") ** 2).alias("ss"),
-                F.sum(
-                    (F.abs(F.col("prev_rank") - F.col("prev2")) > cfg.tolerance).cast(
-                        "long"
-                    )
-                ).alias("lag_active"),
+            nxt, c = loop.commit(
+                nxt, t, drop=("prev2",),
+                ss=F.sum(F.col("next") ** 2),
+                lag_active=F.sum(
+                    (F.abs(F.col("prev_rank") - F.col("prev2")) > cfg.tolerance).cast("long")
+                ),
             )
-            nxt = ckpt.checkpoint(nxt.drop("prev2"), t)
-            row = obs.get
-            norm = float(row["ss"] or 0.0) ** 0.5 or 1.0
-            lag_active = row["lag_active"]
             prev_scores = state
-            state = _normalized(nxt, norm)
-            ckpt.log(
-                t, algorithm="eigenvector", lag_active=lag_active,
-                wall_s=time.time() - t0,
-            )
+            state = _normalized(nxt, c["ss"])
             # lag_active compares superstep t-1 vs t-2 (null on t=1): if the
             # t-1 update changed nothing beyond tolerance, t-1 converged —
             # return ITS scores (this superstep's work is discarded).
-            if t > 1 and int(lag_active or 0) == 0:
+            if t > 1 and c["lag_active"] == 0:
                 ran, converged = t - 1, True
                 state = prev_scores
                 break
@@ -577,4 +514,4 @@ def eigenvector(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Centrali
         from graph_data_science_spark.operators.scaling import scale_property
 
         scores = scale_property(scores, "score", cfg.scaler)
-    return CentralityResult(scores, ran, converged, ckpt.metrics)
+    return CentralityResult(scores, ran, converged, loop.metrics)

@@ -176,7 +176,9 @@ def sssp_delta(
     round is >= the round's minimum improved distance, so once every
     target is reached AND min(frontier distance) >= max(target distance)
     the targets are final; all checks ride the existing per-round
-    Observation (zero extra Spark actions)."""
+    Observation (zero extra Spark actions).  That bound needs non-negative
+    weights, so a weighted run with targets first refuses negative ones
+    (one scan, which also fills the edge cache)."""
     spark = graph.nodes.sparkSession
     ckpt = SuperstepCheckpointer(spark, checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -184,13 +186,17 @@ def sssp_delta(
     edges = cache_copartitioned(
         graph.edges.select("src", "dst", w.alias("w")), n_part, "src"
     )
+    if targets and weighted and not edges.where(F.col("w") < 0).isEmpty():
+        edges.unpersist()
+        raise ValueError(
+            "sssp_delta: targets need non-negative edge weights "
+            "(the settled-target early exit is unsound with negative ones)"
+        )
 
     dist = spark.createDataFrame([(int(source), 0.0)], "id long, distance double")
     frontier = dist
     rounds = 0
     tset = sorted({int(t) for t in targets}) if targets else []
-    from pyspark.sql import Observation
-
     with no_aqe(spark):
         for r in range(1, max_rounds + 1):
             rounds = r
@@ -208,27 +214,24 @@ def sssp_delta(
                 ).alias("distance"),
             )
             # improved-count rides the checkpoint write — one action per round
-            obs = Observation()
             improved_flag = F.col("distance") < F.col("old")
-            aggs = [F.sum(improved_flag.cast("long")).alias("imp")]
+            aggs = {"imp": F.sum(improved_flag.cast("long"))}
             if tset:
                 is_t = F.col("id").isin(tset)
-                aggs += [
-                    F.min(F.when(improved_flag, F.col("distance"))).alias("fmin"),
-                    F.max(F.when(is_t, F.col("distance"))).alias("tmax"),
-                    F.count(F.when(is_t, F.lit(1))).alias("treached"),
-                ]
-            merged = merged.observe(obs, *aggs)
-            merged = ckpt.checkpoint(merged, r)
-            got = obs.get
-            improved = int(got["imp"] or 0)
+                aggs.update(
+                    fmin=F.min(F.when(improved_flag, F.col("distance"))),
+                    tmax=F.max(F.when(is_t, F.col("distance"))),
+                    treached=F.count(F.when(is_t, F.lit(1))),
+                )
+            merged, got = ckpt.commit(merged, r, log=False, **aggs)
+            improved = got["imp"]
             frontier = merged.where(F.col("distance") < F.col("old")).select("id", "distance")
             ckpt.log(r, algorithm="sssp_delta", improved=improved)
             dist = merged.select("id", "distance")
             if improved == 0:
                 break
             # improved > 0 here, so fmin (min improved distance) is non-null
-            if tset and int(got["treached"] or 0) == len(tset):
+            if tset and got["treached"] == len(tset):
                 if got["fmin"] >= got["tmax"]:
                     ckpt.log(r, algorithm="sssp_delta", targets_settled=True)
                     break
@@ -324,8 +327,6 @@ def shortest_paths(
         )
     )
     state = ckpt.checkpoint(state, 0, name="paths")
-    from pyspark.sql import Observation
-
     for r in range(1, 64):
         anc_map = state.select(
             F.col("id").alias("anc"), F.col("anc").alias("anc2"), F.col("seg").alias("seg2")
@@ -339,12 +340,11 @@ def shortest_paths(
             .otherwise(F.concat("seg2", "seg"))
             .alias("seg"),
         )
-        obs = Observation()
-        merged = merged.observe(
-            obs, F.sum(F.col("anc").isNotNull().cast("long")).alias("open")
+        state, row = ckpt.commit(
+            merged, r, name="paths", log=False,
+            open=F.sum(F.col("anc").isNotNull().cast("long")),
         )
-        state = ckpt.checkpoint(merged, r, name="paths")
-        if int(obs.get["open"] or 0) == 0:
+        if row["open"] == 0:
             break
 
     paths = state.select(

@@ -33,7 +33,6 @@ this driver is the cross-check test).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -42,7 +41,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.session import cache_copartitioned
 
 REDUCERS = {
     "sum": F.sum,
@@ -93,53 +92,34 @@ def run_pregel(
 ) -> PregelResult:
     cfg = cfg or PregelConfig()
     spark = graph.nodes.sparkSession
-    fp = None
-    if cfg.checkpoint_path is not None and cfg.computation_id is not None:
-        from graph_data_science_spark.plans.checkpoint import graph_fingerprint
-
-        fp = graph_fingerprint(
-            graph.nodes,
-            graph.edges,
-            algorithm=f"pregel:{cfg.computation_id}",
-            reducer=comp.reducer,
-            orientation=str(cfg.orientation),
-        )
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path, fingerprint=fp)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report("pregel", graph.nodes, graph.edges, cfg.max_iterations))
-
     reducer = REDUCERS[comp.reducer]
-    edges = cache_copartitioned(
-        graph.oriented_edges(cfg.orientation), n_part, "src"
-    )
 
-    state = comp.init(graph.nodes)
-    state_cols = [c for c in state.columns if c != "id"]
     # resume: the superstep is a deterministic function of the previous
     # (state, _computed) snapshot, so continuing from the latest committed
     # superstep replays the uninterrupted trajectory exactly.  Only attempted
-    # when a computation_id made the fingerprint specific (see PregelConfig).
-    start_t = 0
-    resumed = ckpt.latest_superstep() if fp is not None else None
-    if resumed is not None and 0 < resumed < cfg.max_iterations:
-        state = ckpt.load(resumed)
-        start_t = resumed
-        ckpt.log(resumed, algorithm="pregel", resumed_from=resumed)
-    else:
+    # when a computation_id names the computation (see PregelConfig).
+    ran, converged = cfg.max_iterations, False
+    with SuperstepCheckpointer.for_algorithm(
+        "pregel", graph, cfg.max_iterations, cfg.checkpoint_path,
+        resume=None if cfg.computation_id is None else dict(
+            computation_id=cfg.computation_id,
+            reducer=comp.reducer,
+            orientation=str(cfg.orientation),
+        ),
+    ) as loop:
+        edges = loop.hold(cache_copartitioned(
+            graph.oriented_edges(cfg.orientation), n_part, "src"
+        ))
         # _computed: the node ran compute() last superstep (initially: all).
         # Sending is an EVENT tied to being computed — a node that receives no
         # messages is not invoked and must NOT re-send its stale state
         # (ComputeStep.java:95 skips halted nodes without messages).
-        state = state.withColumn("_computed", F.lit(True))
-        state = ckpt.checkpoint(state, 0)
-
-    ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(start_t + 1, cfg.max_iterations + 1):
+        state = loop.initial(
+            lambda: comp.init(graph.nodes).withColumn("_computed", F.lit(True))
+        )
+        state_cols = [c for c in state.columns if c not in ("id", "_computed")]
+        for t in loop.supersteps():
             senders = state.where(F.col("_computed"))
             if comp.send_when is not None:
                 gate = comp.send_when(senders)
@@ -175,24 +155,11 @@ def run_pregel(
             will_send = F.col("_computed")
             if comp.send_when is not None:
                 will_send = will_send & comp.send_when(new_state)
-
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            new_state = new_state.observe(
-                obs, F.sum(will_send.cast("long")).alias("active")
+            state, c = loop.commit(
+                new_state, t, extra=comp.master_compute, active=F.sum(will_send.cast("long"))
             )
-            state = ckpt.checkpoint(new_state, t)
-            active = int(obs.get["active"] or 0)
-
-            globals_row = comp.master_compute(state) if comp.master_compute else {}
-            ckpt.log(
-                t, algorithm="pregel", active=active, wall_s=time.time() - t0,
-                **globals_row,
-            )
-            if active == 0:
+            if c["active"] == 0:
                 ran, converged = t, True
                 break
 
-    edges.unpersist()
-    return PregelResult(state.select("id", *state_cols), ran, converged, ckpt.metrics)
+    return PregelResult(state.select("id", *state_cols), ran, converged, loop.metrics)

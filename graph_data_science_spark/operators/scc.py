@@ -278,12 +278,11 @@ def scc(
                         (F.coalesce("nbr_max", F.col("color")) > F.col("color")).alias("_chg"),
                     )
                     color = merged.select("id", "color")
-                obs = Observation()
-                merged = merged.observe(obs, F.sum(F.col("_chg").cast("long")).alias("c"))
-                color = ckpt.checkpoint(
-                    merged.select("id", "color"), outer * 100 + it, name="color"
+                color, row = ckpt.commit(
+                    merged, outer * 100 + it, name="color", drop=("_chg",), log=False,
+                    c=F.sum(F.col("_chg").cast("long")),
                 )
-                if int(obs.get["c"] or 0) == 0:
+                if row["c"] == 0:
                     break
             ckpt.log(outer, algorithm="scc_color", rounds=it, wall_s=time.time() - t0)
 
@@ -333,12 +332,11 @@ def scc(
                     member = member.select(
                         "root", "id", F.lit(False).alias("_new")
                     ).unionByName(nxt.withColumn("_new", F.lit(True)))
-                obs = Observation()
-                member = member.observe(
-                    obs, F.sum(F.col("_new").cast("long")).alias("c")
+                member, row = ckpt.commit(
+                    member, outer * 100 + it, name="member", log=False,
+                    c=F.sum(F.col("_new").cast("long")),
                 )
-                member = ckpt.checkpoint(member, outer * 100 + it, name="member")
-                if int(obs.get["c"] or 0) == 0:
+                if row["c"] == 0:
                     break
             ckpt.log(outer, algorithm="scc_backward", rounds=it, wall_s=time.time() - t0)
             member = member.select("root", "id")

@@ -23,7 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
@@ -95,12 +95,11 @@ def minimum_spanning_forest(
                 .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), F.col("p.w").alias("w"))
                 .distinct()
             )
-            obs = Observation()
-            chosen = chosen.observe(obs, F.count(F.lit(1)).alias("n"))
-            chosen = ckpt.checkpoint(chosen, r, name="mst_chosen")
-            n_chosen = int(obs.get["n"] or 0)
-            ckpt.log(r, algorithm="boruvka", chosen=n_chosen)
-            if n_chosen == 0:
+            chosen, row = ckpt.commit(
+                chosen, r, name="mst_chosen", log=False, chosen=F.count(F.lit(1))
+            )
+            ckpt.log(r, algorithm="boruvka", **row)
+            if row["chosen"] == 0:
                 break
             forest = chosen if forest is None else forest.unionByName(chosen)
             forest = ckpt.checkpoint(forest, r, name="mst_forest")

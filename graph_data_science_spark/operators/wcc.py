@@ -21,7 +21,6 @@ checkpointed (plan truncation + resume).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -29,7 +28,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -56,23 +55,7 @@ class WccResult:
 def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
     cfg = cfg or WccConfig()
     spark = graph.nodes.sparkSession
-    fp = None
-    if cfg.checkpoint_path is not None:
-        from graph_data_science_spark.plans.checkpoint import graph_fingerprint
-
-        fp = graph_fingerprint(
-            graph.nodes,
-            graph.edges,
-            algorithm="wcc",
-            threshold=cfg.threshold,
-            seed_property=cfg.seed_property,
-        )
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path, fingerprint=fp)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report("wcc", graph.nodes, graph.edges, cfg.max_rounds if hasattr(cfg, 'max_rounds') else 50))
 
     edges = graph.edges
     if cfg.threshold is not None:
@@ -84,7 +67,6 @@ def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    sym = cache_copartitioned(sym, n_part, "src")
 
     # comp(id) := id; changed := true.  Seeds are applied as a post-pass (see
     # below): pointer jumping (comp := comp[comp]) indexes the comp table by
@@ -94,26 +76,18 @@ def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
     # labels converges to min(init) per component, which equals relabelling
     # the node-id fixpoint by min(init) over each component's members —
     # connectivity is seed-independent.
-    # resume (north rule: every superstep resumable mid-iteration): with a
-    # durable checkpoint path, continue from the latest COMMITTED round —
-    # min-label propagation is monotone, so restarting from any committed
-    # state converges to the same fixpoint.
-    start_r = 0
-    resumed = ckpt.latest_superstep()
-    if resumed is not None and 0 < resumed < cfg.max_rounds:
-        state = ckpt.load(resumed)
-        start_r = resumed
-        ckpt.log(resumed, algorithm="wcc", resumed_from=resumed)
-    else:
-        state = graph.nodes.select(
-            "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
-        )
-        state = ckpt.checkpoint(state, 0)
-
+    # resume: min-label propagation is monotone, so restarting from any
+    # committed state converges to the same fixpoint.
     rounds, converged = cfg.max_rounds, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for r in range(start_r + 1, cfg.max_rounds + 1):
+    with SuperstepCheckpointer.for_algorithm(
+        "wcc", graph, cfg.max_rounds, cfg.checkpoint_path,
+        resume=dict(threshold=cfg.threshold, seed_property=cfg.seed_property),
+    ) as loop:
+        sym = loop.hold(cache_copartitioned(sym, n_part, "src"))
+        state = loop.initial(lambda: graph.nodes.select(
+            "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
+        ))
+        for r in loop.supersteps():
             frontier = state.where("changed").select("id", "comp")
             # neighbor-min: each changed node offers its comp to its neighbors
             offers = (
@@ -137,15 +111,8 @@ def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
             state = jumped.select(
                 "id", "comp", (F.col("comp") < F.col("old_comp")).alias("changed")
             )
-            # changed-count rides the checkpoint write (observe) — no extra job
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            state = state.observe(obs, F.sum(F.col("changed").cast("long")).alias("c"))
-            state = ckpt.checkpoint(state, r)
-            changed = int(obs.get["c"] or 0)
-            ckpt.log(r, algorithm="wcc", changed=changed, wall_s=time.time() - t0)
-            if changed == 0:
+            state, c = loop.commit(state, r, changed=F.sum(F.col("changed").cast("long")))
+            if c["changed"] == 0:
                 rounds, converged = r, True
                 break
 
@@ -172,7 +139,7 @@ def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
         )
     if cfg.consecutive_ids:
         comps = consecutive_ids(comps)
-    return WccResult(comps, rounds, converged, ckpt.metrics)
+    return WccResult(comps, rounds, converged, loop.metrics)
 
 
 def consecutive_ids(components: DataFrame, comp_col: str = "comp") -> DataFrame:

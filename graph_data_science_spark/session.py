@@ -52,6 +52,22 @@ def cache_copartitioned(df, num_partitions: int, *keys: str):
         return df.repartition(num_partitions, *keys).cache()
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of physical RAM, capped at 48g (``48g`` if RAM is unknown).
+
+    In local mode the driver is also the executor, and the heap competes with
+    the Python workers and the page cache for the same RAM; a fixed 48g heap
+    outgrows a small host and gets the JVM OOM-killed.
+    """
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{min(kb // 2048, cap_mb)}m"
+
+
 def get_spark(
     app_name: str = "graph-data-science-spark",
     master: str | None = None,
@@ -83,7 +99,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: driver == executor; size the heap so per-task execution
         # memory fits a superstep partition without sort spills
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         # per-superstep checkpoint writes: v2 committer renames files in the
         # tasks instead of a serial driver-side rename pass, and the _SUCCESS
         # marker write is skipped — both are on the superstep critical path

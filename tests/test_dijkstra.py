@@ -12,6 +12,7 @@ from graph_data_science_spark.operators.paths import (
     dijkstra_single_source,
     dijkstra_source_target,
     shortest_paths,
+    sssp_delta,
 )
 
 
@@ -86,3 +87,19 @@ def test_degree_histogram_exact(spark):
             for r in degree_histogram(g).collect()}
     # node 0 has out-degree 3; nodes 1..8 out-degree 1; 9,10 out-degree 0
     assert hist == {3: 1, 1: 8, 0: 2}
+
+
+def test_targets_refuse_negative_weights(spark):
+    # 0->1 (5), 1->2 (-4): the settled-target exit would stop with d(2) = 5
+    # before the cheaper 0->1->2 path (cost 1) lands; refuse instead
+    e = spark.createDataFrame(
+        [(0, 2, 5.0), (0, 1, 5.0), (1, 2, -4.0)], "src long, dst long, weight double"
+    )
+    g = LinkGraph.from_edges(spark, e)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="non-negative"):
+        dijkstra_source_target(g, 0, 2, weighted=True)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    # without targets there is no early exit to protect
+    full = {r["id"]: r["distance"] for r in sssp_delta(g, 0).distances.collect()}
+    assert full[2] == 1.0
